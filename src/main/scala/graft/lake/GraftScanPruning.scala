@@ -81,7 +81,7 @@ class GraftScanPruning(spark: SparkSession) extends Rule[LogicalPlan] {
   /** Soundness of pattern B rests on "a scanned file whose key is
     * absent from the map only produces rows the join DROPS" — which is
     * only true when the join condition is an equality on the
-    * `__graft_file` key itself. `readEntriesPhys` builds exactly that
+    * `__graft_file` key itself. The plain read builds exactly that
     * (a USING-join on the key), but a future plan variant reusing the
     * same structural shape under a different condition must not be
     * mis-pruned: require at least one EqualTo/EqualNullSafe conjunct
@@ -333,7 +333,7 @@ object GraftScanPruning {
   private[lake] val ExaminedMap =
     TreeNodeTag[Boolean]("graft.scan.examined.map")
 
-  /** The partition-value attach join's file-key column name (must stay
-    * in sync with [[MergeTable.readEntriesPhys]]'s fpMap). */
+  /** The file-key column the plain read's partition-value attach join
+    * is keyed on — the one definition [[MergeTable]] builds it from. */
   private[lake] val FileKeyCol = "__graft_file"
 }

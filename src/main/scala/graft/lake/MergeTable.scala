@@ -71,32 +71,22 @@ import org.apache.spark.sql.functions._
 final class MergeTable private (
     val spark: SparkSession,
     val root: Path,
-    val partitionCols: Seq[String],
-    val statsCols: Seq[String],
-    val deletionVectors: Boolean = false,
-    val bloomCols: Seq[String] = Nil,
-    val logStore: LogStore = LogStore.Posix,
-    val optimizeWrite: Boolean = false,
-    val autoCompact: Option[(Long, Int)] = None,
-    val ckptRetention: (Int, Long) = MergeTable.DefaultCkptRetention,
-    val rowTracking: Boolean = false,
-    val verifyOnRead: Boolean = false,
-    val pqCkptEntries: Long = MergeTable.DefaultPqCkptEntries) {
+    opts: TableOptions) {
 
   import MergeTable._
+  import GraftScanPruning.FileKeyCol
 
-  // Bloom columns must be DATA columns: partitionBy strips partition
-  // columns from the data files, so a bloom over one would scan
-  // all-NULL values, silently write an empty sidecar slice, and later
-  // probes would prune files that DO hold matching rows — bloom false
-  // negatives, i.e. wrong results. Fail at construction, not mid-query
-  // (r15 advice: withBlooms' writtenSchema check passed for partition
-  // columns because df.schema still carries them pre-strip).
-  require(bloomCols.intersect(partitionCols).isEmpty,
-    s"MergeTable at $root: bloom column(s) " +
-      s"${bloomCols.intersect(partitionCols).mkString(", ")} are " +
-      "partition column(s) — bloom columns must be data columns " +
-      "(partition pruning already covers the partition column)")
+  def partitionCols: Seq[String] = opts.partitionCols
+  def statsCols: Seq[String] = opts.statsCols
+  def deletionVectors: Boolean = opts.deletionVectors
+  def bloomCols: Seq[String] = opts.bloomCols
+  def logStore: LogStore = opts.logStore
+  def optimizeWrite: Boolean = opts.optimizeWrite
+  def autoCompact: Option[(Long, Int)] = opts.autoCompact
+  def ckptRetention: (Int, Long) = opts.ckptRetention
+  def rowTracking: Boolean = opts.rowTracking
+  def verifyOnRead: Boolean = opts.verifyOnRead
+  def pqCkptEntries: Long = opts.pqCkptEntries
 
   /** The primary (first) partition column — compatibility accessor for
     * single-column callers; multi-column layouts use
@@ -118,9 +108,7 @@ final class MergeTable private (
     * hook (see [[LogStore]]). Reads are unaffected; only the atomic
     * create-if-absent publish goes through the seam. */
   def withLogStore(ls: LogStore): MergeTable =
-    new MergeTable(spark, root, partitionCols, statsCols,
-      deletionVectors, bloomCols, ls, optimizeWrite, autoCompact,
-      ckptRetention, rowTracking, verifyOnRead, pqCkptEntries)
+    withOptions(opts.copy(logStore = ls))
 
   /** The same handle with OPTIMIZED WRITES on (Delta's
     * `delta.autoOptimize.optimizeWrite`): every [[writeData]] of a
@@ -132,10 +120,7 @@ final class MergeTable private (
     * per commit and must be paid back by compact(). Unpartitioned
     * tables are unchanged ([[compactSmall]] is their remedy). */
   def withOptimizeWrite: MergeTable =
-    new MergeTable(spark, root, partitionCols, statsCols,
-      deletionVectors, bloomCols, logStore, optimizeWrite = true,
-      autoCompact, ckptRetention, rowTracking, verifyOnRead,
-      pqCkptEntries)
+    withOptions(opts.copy(optimizeWrite = true))
 
   /** The same handle with AUTO COMPACTION on (Delta's
     * `delta.autoOptimize.autoCompact`): after any commit, if some
@@ -158,10 +143,7 @@ final class MergeTable private (
     require(targetBytes > 0 && minFiles >= 2,
       s"withAutoCompact: need targetBytes > 0 and minFiles >= 2, got " +
         s"($targetBytes, $minFiles)")
-    new MergeTable(spark, root, partitionCols, statsCols,
-      deletionVectors, bloomCols, logStore, optimizeWrite,
-      Some((targetBytes, minFiles)), ckptRetention, rowTracking,
-      verifyOnRead, pqCkptEntries)
+    withOptions(opts.copy(autoCompact = Some((targetBytes, minFiles))))
   }
 
   /** The same handle with a NON-DEFAULT checkpoint retention (r13
@@ -184,9 +166,7 @@ final class MergeTable private (
     require(keep >= 1 && retainMs >= 0L,
       s"withCheckpointRetention: need keep >= 1 and retainMs >= 0, " +
         s"got ($keep, $retainMs)")
-    new MergeTable(spark, root, partitionCols, statsCols,
-      deletionVectors, bloomCols, logStore, optimizeWrite, autoCompact,
-      (keep, retainMs), rowTracking, verifyOnRead, pqCkptEntries)
+    withOptions(opts.copy(ckptRetention = (keep, retainMs)))
   }
 
   /** The same handle with a NON-DEFAULT parquet-checkpoint threshold
@@ -198,9 +178,7 @@ final class MergeTable private (
   def withParquetCheckpointThreshold(entries: Long): MergeTable = {
     require(entries >= 1L,
       s"withParquetCheckpointThreshold: need entries >= 1, got $entries")
-    new MergeTable(spark, root, partitionCols, statsCols,
-      deletionVectors, bloomCols, logStore, optimizeWrite, autoCompact,
-      ckptRetention, rowTracking, verifyOnRead, pqCkptEntries = entries)
+    withOptions(opts.copy(pqCkptEntries = entries))
   }
 
   /** The same handle with ROW TRACKING on (Delta's row-ID table
@@ -214,8 +192,9 @@ final class MergeTable private (
     * on, which `monotonically_increasing_id` cannot give (it changes
     * on every read). Content-preserving rewrites (the OPTIMIZE family:
     * [[compact]], [[compactSmall]], [[compactWhere]], [[zorder]],
-    * [[purgeVectors]]) MATERIALIZE ids physically through the rewrite,
-    * so reorganizing 100 TB never changes any row's identity;
+    * [[clusterHilbert]], [[purgeVectors]]) MATERIALIZE ids physically
+    * through the rewrite, so reorganizing 100 TB never changes any
+    * row's identity;
     * DV-based DELETE/UPDATE leave unmatched rows in place (stable for
     * free). Copy-on-write DML rewrites assign fresh ids to the rows
     * they rewrite — Delta's exact contract without
@@ -225,10 +204,7 @@ final class MergeTable private (
     * feature (materialized columns + the W action change what the log
     * and footers mean). */
   def withRowTracking: MergeTable =
-    new MergeTable(spark, root, partitionCols, statsCols,
-      deletionVectors, bloomCols, logStore, optimizeWrite, autoCompact,
-      ckptRetention, rowTracking = true, verifyOnRead = verifyOnRead,
-      pqCkptEntries = pqCkptEntries)
+    withOptions(opts.copy(rowTracking = true))
 
   /** The same handle with READ-PATH CHECKSUM VERIFICATION on: the
     * first time this handle resolves a version's snapshot, it is
@@ -244,10 +220,7 @@ final class MergeTable private (
     * whose threat model includes the LOG STORE itself (shared object
     * buckets, replicated logs). */
   def withChecksumVerification: MergeTable =
-    new MergeTable(spark, root, partitionCols, statsCols,
-      deletionVectors, bloomCols, logStore, optimizeWrite, autoCompact,
-      ckptRetention, rowTracking, verifyOnRead = true,
-      pqCkptEntries = pqCkptEntries)
+    withOptions(opts.copy(verifyOnRead = true))
 
   /** The same table handle bound to a DIFFERENT SparkSession — the
     * multi-session hook ([[graft.sql.GraftSql]] rebinds a registered
@@ -256,10 +229,10 @@ final class MergeTable private (
     * layout contract and log store carry over; only the session the
     * reads/writes run on changes. */
   def withSession(s: SparkSession): MergeTable =
-    if (s eq spark) this
-    else new MergeTable(s, root, partitionCols, statsCols,
-      deletionVectors, bloomCols, logStore, optimizeWrite, autoCompact,
-      ckptRetention, rowTracking, verifyOnRead, pqCkptEntries)
+    if (s eq spark) this else open(s, root, opts)
+
+  /** This handle's session and root under options `o`. */
+  private def withOptions(o: TableOptions): MergeTable = open(spark, root, o)
 
   // ---- log ----------------------------------------------------------------
 
@@ -750,12 +723,7 @@ final class MergeTable private (
       Map("column" -> name, "type" -> dataType.simpleString) ++
         default.map("default" -> _)) { () =>
       val (v, live) = latest()
-      val base = schemaAt(v).getOrElse {
-        require(live.nonEmpty,
-          s"MergeTable at $root: no declared schema and no data — " +
-            "declareSchema first")
-        readEntriesPhys(live).schema
-      }
+      val base = alterBaseSchema(v, live)
       val (ren, drops) = if (v == 0L) (Map.empty[String, String], Set.empty[String]) else mappingAt(v)
       val taken = base.fieldNames.toSet ++ ren.values ++ drops
       require(!taken.exists(_.equalsIgnoreCase(name)),
@@ -820,12 +788,7 @@ final class MergeTable private (
     retryingCommit("ALTER COLUMN TYPE",
       Map("column" -> name, "type" -> to.simpleString)) { () =>
       val (v, live) = latest()
-      val base = schemaAt(v).getOrElse {
-        require(live.nonEmpty,
-          s"MergeTable at $root: no declared schema and no data — " +
-            "declareSchema first")
-        readEntriesPhys(live).schema
-      }
+      val base = alterBaseSchema(v, live)
       val phys = physicalOf(name)
       val i = base.fieldNames.indexOf(phys)
       require(i >= 0,
@@ -858,6 +821,17 @@ final class MergeTable private (
       case _                                                => false
     }
   }
+
+  /** The PHYSICAL schema a metadata-only ALTER at `v` edits: the
+    * declared one, else the live files'. */
+  private def alterBaseSchema(v: Long, live: Seq[FileEntry])
+      : org.apache.spark.sql.types.StructType =
+    schemaAt(v).getOrElse {
+      require(live.nonEmpty,
+        s"MergeTable at $root: no declared schema and no data — " +
+          "declareSchema first")
+      readEntriesPhys(live).schema
+    }
 
   /** Served from the unified [[metaAt]] fold — [[presentLogical]]
     * consults the mapping on every read. */
@@ -2407,49 +2381,57 @@ final class MergeTable private (
     try {
       retryingCommit("MERGE",
       Map("key" -> pk)) { () =>
-        val (version, live) = latest()
-        if (live.isEmpty) {
-          val (_, entries) = writeData(src)
-          (CommitDelta(entries, Nil, mSchema = evolvedSchema(src)), version)
-        } else if (partitionCols.nonEmpty) {
-            // Partitions needing rewrite = those holding a matched key, plus
-            // those receiving inserts. Distinct partition *tuples* are log-
-            // scale metadata — safe to collect (cardinality-guarded); both
-            // sides discover in ONE action (mergeTouchedParts).
-            val (srcParts, matchedParts) = mergeTouchedParts(
-              src, src.select(col(pk)).distinct(), Seq(pk), live)
-            require(srcParts.size <= MaxPartitionsPerMerge,
-              s"merge touches ${srcParts.size} partitions (> " +
-                s"$MaxPartitionsPerMerge); repartition the source or " +
-                "raise the guard — partition values are driver metadata")
-            val touched = srcParts ++ matchedParts
-            val touchedFiles =
-              live.filter(e => touched.contains(e.partitionValue))
-            val remaining = readEntries(touchedFiles)
-              .join(src.select(col(pk)).distinct(), Seq(pk), "left_anti")
-            val out = remaining.unionByName(src, evolveSchema)
-            val (_, newEntries) = writeData(out)
-            // Delta entries: only the rewritten files appear in the log —
-            // untouched partitions' files are implicitly carried over.
-            (CommitDelta(newEntries, touchedFiles.map(_.relPath),
-              mSchema = evolvedSchema(out)), version)
-        } else {
-            // Unpartitioned: inherently a full-table rewrite, as in Delta
-            // without partition pruning.
-            if (live.size >= FullRewriteWarnFiles)
-              logger.warn(
-                s"MergeTable at $root: unpartitioned MERGE rewrites all " +
-                  s"${live.size} live files; declare a partition column " +
-                  "to get partition-level file skipping")
-            val remaining = readEntries(live)
-              .join(src.select(col(pk)).distinct(), Seq(pk), "left_anti")
-            val out = remaining.unionByName(src, evolveSchema)
-            val (_, newEntries) = writeData(out)
-            (CommitDelta(newEntries, live.map(_.relPath),
-              mSchema = evolvedSchema(out)), version)
-        }
+        upsertRewrite(src, src.select(col(pk)).distinct(), pk,
+          evolveSchema, cdc = false)
       }
     } finally src.unpersist()
+  }
+
+  /** The keyed upsert rewrite of [[merge]] and [[mergeCdc]] against
+    * the latest snapshot: every live row whose `pk` is in `keys` is
+    * dropped from the files it must touch, which are written back
+    * together with `upserts` (source wins on key match, inserts
+    * otherwise). A partitioned table rewrites only the partitions
+    * holding a key of `keys` or receiving an upsert — distinct
+    * partition TUPLES are log-scale metadata, safe to collect
+    * (cardinality-guarded), and both sides are discovered in ONE
+    * action ([[mergeTouchedParts]]); only the rewritten files appear
+    * in the delta, untouched partitions' files carry over implicitly.
+    * An unpartitioned table is inherently a full-table rewrite, as in
+    * Delta without partition pruning. `evolveSchema` lets the two
+    * sides' column sets differ (merge's `mergeSchema`); a MERGE commit
+    * also records a schema its output evolved ([[evolvedSchema]]). */
+  private def upsertRewrite(upserts: DataFrame, keys: DataFrame, pk: String,
+      evolveSchema: Boolean, cdc: Boolean): (CommitDelta, Long) = {
+    val (version, live) = latest()
+    val touchedFiles =
+      if (live.isEmpty) live
+      else if (partitionCols.nonEmpty) {
+        val (srcParts, matchedParts) =
+          mergeTouchedParts(upserts, keys, Seq(pk), live)
+        require(srcParts.size <= MaxPartitionsPerMerge,
+          s"${if (cdc) "mergeCdc" else "merge"} touches ${srcParts.size} " +
+            s"partitions (> $MaxPartitionsPerMerge); repartition the " +
+            s"${if (cdc) "feed" else "source"} or raise the guard — " +
+            "partition values are driver metadata")
+        val touched = srcParts ++ matchedParts
+        live.filter(e => touched.contains(e.partitionValue))
+      } else {
+        if (live.size >= FullRewriteWarnFiles)
+          logger.warn(
+            s"MergeTable at $root: unpartitioned " +
+              (if (cdc) "CDC apply" else "MERGE") +
+              s" rewrites all ${live.size} live files; declare a " +
+              "partition column to get partition-level file skipping")
+        live
+      }
+    val out =
+      if (live.isEmpty) upserts
+      else readEntries(touchedFiles).join(keys, Seq(pk), "left_anti")
+        .unionByName(upserts, evolveSchema)
+    val (_, newEntries) = writeData(out)
+    (CommitDelta(newEntries, touchedFiles.map(_.relPath),
+      mSchema = if (cdc) None else evolvedSchema(out)), version)
   }
 
   /** When this table has a DECLARED schema and a schema-evolving write
@@ -2503,6 +2485,10 @@ final class MergeTable private (
     txn.foreach { case (app, bv) =>
       if (txnVersion(app).exists(_ >= bv)) return latestVersion()
     }
+    // inside an attempt: the snapshot the commit is based on
+    def guardTxn(v: Long): Unit = txn.foreach { case (app, bv) =>
+      if (txnsAt(v).get(app).exists(_ >= bv)) throw new TxnAlreadyApplied
+    }
     val df1 = withGenerated(df0)
     // a DECLARED schema is binding even before the first data commit —
     // readEntries(Nil) resolves it through emptyLikePhys
@@ -2529,10 +2515,7 @@ final class MergeTable private (
       try retryingCommit("WRITE", appendOp(txn),
           scope = ReadScope.Nothing) { () =>
         val (v, live) = latest()
-        txn.foreach { case (app, bv) =>
-          if (txnsAt(v).get(app).exists(_ >= bv))
-            throw new TxnAlreadyApplied
-        }
+        guardTxn(v)
         // re-validate inside the attempt: a lost race that RECOMPUTES
         // must see the conformance check against the FRESH snapshot (a
         // concurrent overwrite may have changed an inferred schema);
@@ -2552,10 +2535,7 @@ final class MergeTable private (
       try retryingCommit("WRITE", appendOp(txn),
           scope = ReadScope.Nothing) { () =>
         val (v, live) = latest()
-        txn.foreach { case (app, bv) =>
-          if (txnsAt(v).get(app).exists(_ >= bv))
-            throw new TxnAlreadyApplied
-        }
+        guardTxn(v)
         val (df, idTxns) = withIdentity(df1, v)
         enforceConstraints(df, "append")
         checkSchema(df, live)
@@ -2813,38 +2793,10 @@ final class MergeTable private (
     try {
       try retryingCommit("MERGE",
       Map("key" -> pk, "feed" -> "cdc")) { () =>
-        val (version, live) = latest()
-        val upserts = src.filter(col(ChangeType) =!= "delete").drop(ChangeType)
-        val keys = src.select(col(pk)).distinct()
-        if (live.isEmpty) {
-          val (_, entries) = writeData(upserts)
-          (CommitDelta(entries, Nil), version)
-        } else if (partitionCols.nonEmpty) {
-            val (insParts, matchedParts) =
-              mergeTouchedParts(upserts, keys, Seq(pk), live)
-            require(insParts.size <= MaxPartitionsPerMerge,
-              s"mergeCdc touches ${insParts.size} partitions (> " +
-                s"$MaxPartitionsPerMerge); repartition the feed or raise " +
-                "the guard — partition values are driver metadata")
-            val touched = insParts ++ matchedParts
-            val touchedFiles =
-              live.filter(e => touched.contains(e.partitionValue))
-            val remaining = readEntries(touchedFiles)
-              .join(keys, Seq(pk), "left_anti")
-            val out = remaining.unionByName(upserts)
-            val (_, newEntries) = writeData(out)
-            (CommitDelta(newEntries, touchedFiles.map(_.relPath)), version)
-        } else {
-            if (live.size >= FullRewriteWarnFiles)
-              logger.warn(
-                s"MergeTable at $root: unpartitioned CDC apply rewrites " +
-                  s"all ${live.size} live files; declare a partition " +
-                  "column to get partition-level file skipping")
-            val remaining = readEntries(live)
-              .join(keys, Seq(pk), "left_anti")
-            val (_, newEntries) = writeData(remaining.unionByName(upserts))
-            (CommitDelta(newEntries, live.map(_.relPath)), version)
-        }
+        upsertRewrite(
+          src.filter(col(ChangeType) =!= "delete").drop(ChangeType),
+          src.select(col(pk)).distinct(), pk, evolveSchema = false,
+          cdc = true)
       } catch {
         // The fused tie check raises inside a Spark task; unwrap the
         // job-failure layers back to the SEQUENCE BY contract's
@@ -2881,15 +2833,26 @@ final class MergeTable private (
     retryingCommit("OPTIMIZE",
         scope = ReadScope.RemovedFiles) { () =>
       val (version, live) = latest()
-      val df0 = readForRewrite(live)
-      val df =
+      rewriteFiles(version, live) { df =>
         if (clusterBy.nonEmpty)
-          df0.repartitionByRange(filesPerPartition, clusterBy: _*)
+          df.repartitionByRange(filesPerPartition, clusterBy: _*)
             .sortWithinPartitions(clusterBy: _*)
-        else df0.repartition(filesPerPartition)
-      val (_, entries) = writeData(df, allowHidden = true)
-      (CommitDelta(entries, live.map(_.relPath)), version)
+        else df.repartition(filesPerPartition)
+      }
     }
+
+  /** The OPTIMIZE family's one rewrite ([[compact]], [[zorder]],
+    * [[compactWhere]], [[clusterHilbert]], [[purgeVectors]]): read
+    * `files` for rewrite — a row-tracked snapshot carries every row's
+    * id and commit version through ([[readForRewrite]]) — `reshape`
+    * the rows, write them with the materialized row-tracking columns
+    * allowed, and replace `files` with the result in one delta. */
+  private def rewriteFiles(version: Long, files: Seq[FileEntry])(
+      reshape: DataFrame => DataFrame): (CommitDelta, Long) = {
+    val (_, entries) =
+      writeData(reshape(readForRewrite(files)), allowHidden = true)
+    (CommitDelta(entries, files.map(_.relPath)), version)
+  }
 
   /** Delta-parity `OPTIMIZE` (bin-packing flavor): coalesce only the
     * UNDER-SIZED live files. Within each partition, files below
@@ -2952,13 +2915,7 @@ final class MergeTable private (
         val touched = bins.flatten.toSeq
         import spark.implicits._
         val binDf = broadcast(binOf.toDF(FileTag, BinCol))
-        val tracked = touched.forall(_.rowIds.isDefined)
-        val src =
-          if (tracked)
-            presentLogical(
-              readEntriesRowIdsPhys(touched, keep = Seq(FileTag)))
-          else readEntriesTagged(touched, keep = Seq(FileTag))
-        val packed = src
+        val packed = readForRewrite(touched, keep = Seq(FileTag))
           .join(binDf, Seq(FileTag))
           .repartition(bins.length, col(BinCol))
           .drop(BinCol, FileTag)
@@ -2991,27 +2948,30 @@ final class MergeTable private (
       Map("zOrderBy" -> cols.mkString(",")),
       scope = ReadScope.RemovedFiles) { () =>
       val (version, live) = latest()
-      val df = clusterZ(readForRewrite(live), cols, filesPerPartition)
-      val (_, entries) = writeData(df, allowHidden = true)
-      (CommitDelta(entries, live.map(_.relPath)), version)
+      rewriteFiles(version, live)(clusterZ(_, cols, filesPerPartition))
     }
   }
 
   /** Z-cluster `df0` on `cols` into `numParts` range partitions
     * (shared by [[zorder]] and the scoped [[compactWhere]]): min-max
-    * scale each column to 16 bits, interleave the bits into the
-    * Z-value, range-repartition and sort by it. */
+    * scale each column to 16 bits and interleave the bits into the
+    * Z-value. */
   private def clusterZ(df0: DataFrame, cols: Seq[String],
       numParts: Int): DataFrame = {
     val scaled = scaled16(df0, cols)
-    val z = (0 until 16).flatMap(j => scaled.indices.map(k =>
+    clusterCurve(df0, (0 until 16).flatMap(j => scaled.indices.map(k =>
       s"(((${scaled(k)} >> $j) & 1) << ${j * cols.size + k})"))
-      .mkString(" + ")
-    df0.withColumn(ZCol, expr(z))
+      .mkString(" + "), numParts)
+  }
+
+  /** Range-repartition `df` into `numParts` partitions on the
+    * space-filling-curve index `curveSql` and sort each by it. */
+  private def clusterCurve(df: DataFrame, curveSql: String,
+      numParts: Int): DataFrame =
+    df.withColumn(ZCol, expr(curveSql))
       .repartitionByRange(numParts, col(ZCol))
       .sortWithinPartitions(col(ZCol))
       .drop(ZCol)
-  }
 
   /** Delta-parity `OPTIMIZE ... WHERE`: [[compact]] (or, with
     * `zorderCols`, [[zorder]]) scoped to the partitions a predicate on
@@ -3049,12 +3009,10 @@ final class MergeTable private (
         if (selected.isEmpty) (CommitDelta(Nil, Nil), version)
         else {
           val parts = math.max(1, passing.size * filesPerPartition)
-          val df0 = readForRewrite(selected)
-          val df =
-            if (zorderCols.nonEmpty) clusterZ(df0, zorderCols, parts)
-            else df0.repartition(parts, partitionCols.map(col): _*)
-          val (_, entries) = writeData(df, allowHidden = true)
-          (CommitDelta(entries, selected.map(_.relPath)), version)
+          rewriteFiles(version, selected) { df =>
+            if (zorderCols.nonEmpty) clusterZ(df, zorderCols, parts)
+            else df.repartition(parts, partitionCols.map(col): _*)
+          }
         }
       }
     }
@@ -3138,15 +3096,11 @@ final class MergeTable private (
       Map("hilbertBy" -> cols.mkString(",")),
       scope = ReadScope.RemovedFiles) { () =>
       val (version, live) = latest()
-      val df0 = readEntries(live)
-      val scaled = scaled16(df0, cols)
-      val df = df0.withColumn(ZCol,
-          expr(MergeTable.hilbertSql(scaled(0), scaled(1))))
-        .repartitionByRange(filesPerPartition, col(ZCol))
-        .sortWithinPartitions(col(ZCol))
-        .drop(ZCol)
-      val (_, entries) = writeData(df)
-      (CommitDelta(entries, live.map(_.relPath)), version)
+      rewriteFiles(version, live) { df =>
+        val scaled = scaled16(df, cols)
+        clusterCurve(df, MergeTable.hilbertSql(scaled(0), scaled(1)),
+          filesPerPartition)
+      }
     }
   }
 
@@ -3167,22 +3121,35 @@ final class MergeTable private (
     * manifest outright. */
   def delete(predicate: Column): Long = retryingCommit("DELETE",
       Map("predicate" -> predicate.toString)) { () =>
+    rowLevelDml(predicate)(_ => Nil,
+      readEntries(_).filter(!coalesce(predicate, lit(false))))
+  }
+
+  /** The one row-level DML body of [[delete]] and [[update]] against
+    * the latest snapshot. Merge-on-read ([[deletionVectors]]): the
+    * matched rows' positions go into a fresh deletion vector
+    * ([[vectorize]]) and `replaced(touched)` adds whatever files
+    * replace the matched rows. Copy-on-write: only the files holding a
+    * matched row are rewritten, as `rewritten(touched)`. Nothing
+    * matched commits an empty delta. */
+  private def rowLevelDml(predicate: Column)(
+      replaced: Seq[FileEntry] => Seq[FileEntry],
+      rewritten: Seq[FileEntry] => DataFrame): (CommitDelta, Long) = {
     val (version, live) = latest()
     if (live.isEmpty) (CommitDelta(Nil, Nil), version)
     else if (deletionVectors) {
       vectorize(live, predicate) match {
         case None => (CommitDelta(Nil, Nil), version)
-        case Some((_, adds, gone)) =>
-          (CommitDelta(adds, gone.map(_.relPath)), version)
+        case Some((touched, adds, gone)) =>
+          (CommitDelta(adds ++ replaced(touched), gone.map(_.relPath)),
+            version)
       }
     } else {
       val hit = touchedFileNames(live, predicate)
       if (hit.isEmpty) (CommitDelta(Nil, Nil), version)
       else {
         val touched = live.filter(e => hit(fileKey(e.relPath)))
-        val survivors = readEntries(touched)
-          .filter(!coalesce(predicate, lit(false)))
-        val (_, newEntries) = writeData(survivors)
+        val (_, newEntries) = writeData(rewritten(touched))
         (CommitDelta(newEntries, touched.map(_.relPath)), version)
       }
     }
@@ -3266,11 +3233,7 @@ final class MergeTable private (
     val (version, live) = latest()
     val vectored = live.filter(_.dv.isDefined)
     if (vectored.isEmpty) (CommitDelta(Nil, Nil), version)
-    else {
-      val (_, entries) =
-        writeData(readForRewrite(vectored), allowHidden = true)
-      (CommitDelta(entries, vectored.map(_.relPath)), version)
-    }
+    else rewriteFiles(version, vectored)(identity)
   }
 
   /** Delta-parity UPDATE: for rows where `predicate` is TRUE, replace
@@ -3291,57 +3254,36 @@ final class MergeTable private (
         "instead")
     retryingCommit("UPDATE",
       Map("predicate" -> predicate.toString, "set" -> set.keys.toSeq.sorted.mkString(","))) { () =>
-      val (version, live) = latest()
-      if (live.isEmpty) (CommitDelta(Nil, Nil), version)
-      else if (deletionVectors) {
-        vectorize(live, predicate) match {
-          case None => (CommitDelta(Nil, Nil), version)
-          case Some((touched, adds, gone)) =>
-            // The new vector isn't committed yet, so this read still
-            // sees the matched rows; rewrite exactly them. Staging under
-            // temp names keeps SQL UPDATE's old-row semantics (`SET
-            // a = b, b = a` swaps) — no SET leaks into another's input.
-            val base = readEntries(touched)
-            set.keys.foreach(c => require(base.columns.contains(c),
-              s"SET column $c does not exist in the table"))
-            val matched = base.filter(coalesce(predicate, lit(false)))
-            val staged = set.foldLeft(matched) { case (df, (c, v)) =>
-              df.withColumn(s"__graft_set_$c", v)
-            }
-            val updated = staged.select(base.columns.map(c =>
-              if (set.contains(c)) col(s"__graft_set_$c").as(c)
-              else col(c)): _*)
-            val recomputed = recomputeGenerated(updated, set.keySet)
-            enforceConstraints(recomputed, "UPDATE")
-            val (_, newEntries) = writeData(recomputed)
-            (CommitDelta(adds ++ newEntries, gone.map(_.relPath)), version)
-        }
-      } else {
-        val hit = touchedFileNames(live, predicate)
-        if (hit.isEmpty) (CommitDelta(Nil, Nil), version)
-        else {
-          val touched = live.filter(e => hit(fileKey(e.relPath)))
-          val base = readEntries(touched)
-          set.keys.foreach(c => require(base.columns.contains(c),
-            s"SET column $c does not exist in the table"))
-          // SQL UPDATE semantics: EVERY SET expression evaluates against
-          // the OLD row (so `SET a = b, b = a` swaps). Stage new values
-          // under temp names first — a sequential withColumn chain would
-          // leak one SET's result into the next one's inputs.
-          val staged = set.foldLeft(base) { case (df, (c, v)) =>
-            df.withColumn(s"__graft_set_$c",
-              when(coalesce(predicate, lit(false)), v).otherwise(col(c)))
-          }
-          val updated = staged.select(base.columns.map(c =>
-            if (set.contains(c)) col(s"__graft_set_$c").as(c)
-            else col(c)): _*)
-          val recomputed = recomputeGenerated(updated, set.keySet)
-          enforceConstraints(recomputed, "UPDATE")
-          val (_, newEntries) = writeData(recomputed)
-          (CommitDelta(newEntries, touched.map(_.relPath)), version)
-        }
-      }
+      val matches = coalesce(predicate, lit(false))
+      rowLevelDml(predicate)(
+        // The new vector isn't committed yet, so this read still sees
+        // the matched rows; rewrite exactly them.
+        touched => writeData(setColumns(
+          readEntries(touched).filter(matches), set)((_, v) => v))._2,
+        touched => setColumns(readEntries(touched), set)((c, v) =>
+          when(matches, v).otherwise(col(c))))
     }
+  }
+
+  /** `rows` with each SET column replaced by `value(column, expr)`,
+    * generated columns recomputed and constraints enforced. SQL UPDATE
+    * semantics: EVERY SET expression evaluates against the OLD row (so
+    * `SET a = b, b = a` swaps) — new values stage under temp names
+    * first, since a sequential withColumn chain would leak one SET's
+    * result into the next one's inputs. */
+  private def setColumns(rows: DataFrame, set: Map[String, Column])(
+      value: (String, Column) => Column): DataFrame = {
+    set.keys.foreach(c => require(rows.columns.contains(c),
+      s"SET column $c does not exist in the table"))
+    val staged = set.foldLeft(rows) { case (df, (c, v)) =>
+      df.withColumn(s"__graft_set_$c", value(c, v))
+    }
+    val updated = staged.select(rows.columns.map(c =>
+      if (set.contains(c)) col(s"__graft_set_$c").as(c)
+      else col(c)): _*)
+    val recomputed = recomputeGenerated(updated, set.keySet)
+    enforceConstraints(recomputed, "UPDATE")
+    recomputed
   }
 
   // ---- CHECK constraints --------------------------------------------------
@@ -3839,8 +3781,8 @@ final class MergeTable private (
 
   // ---- FSCK (log-vs-storage repair) ---------------------------------------
 
-  /** The latest snapshot's entries whose BACKING STORAGE is gone,
-    * split into (unreadable — data file or deletion-vector dir
+  /** The latest snapshot's version, and its entries whose BACKING
+    * STORAGE is gone, split into (unreadable — data file or deletion-vector dir
     * missing, so the entry must be DROPPED) and (bloom-dangling — data
     * intact but the bloom sidecar dir is gone, so only the bloom REF
     * needs clearing). A missing deletion vector drops the whole entry
@@ -3849,8 +3791,8 @@ final class MergeTable private (
     * file's surviving rows, loudly visible in the dry run. A missing
     * bloom sidecar is pure index metadata — clearing the ref costs
     * probe pruning on that file, never rows. */
-  private def fsckPlan(): (Seq[FileEntry], Seq[FileEntry]) = {
-    val (_, live) = latest()
+  private def fsckPlan(): (Long, Seq[FileEntry], Seq[FileEntry]) = {
+    val (v, live) = latest()
     val gone = live.filter { e =>
       !Files.isRegularFile(root.resolve(e.relPath)) ||
         e.dv.exists(d => !Files.isDirectory(root.resolve(d.relDir)))
@@ -3858,7 +3800,7 @@ final class MergeTable private (
     val goneSet = gone.map(_.relPath).toSet
     val bloomDangling = live.filter(e => !goneSet.contains(e.relPath) &&
       e.bloom.exists(b => !Files.isDirectory(root.resolve(b.relDir))))
-    (gone, bloomDangling)
+    (v, gone, bloomDangling)
   }
 
   /** Delta's `FSCK REPAIR TABLE ... DRY RUN`: EVERYTHING a [[fsck]]
@@ -3872,7 +3814,7 @@ final class MergeTable private (
     * LOG still folds to what the committer published; fsck proves
     * STORAGE still holds what the log references. */
   def fsckDryRun(): Seq[String] = {
-    val (gone, dangling) = fsckPlan()
+    val (_, gone, dangling) = fsckPlan()
     (gone.map(_.relPath) ++
       dangling.map(_.relPath + " (clear bloom ref)")).sorted
   }
@@ -3888,7 +3830,7 @@ final class MergeTable private (
     * every optimistic attempt, so no pre-computed count could honestly
     * describe what won the race. */
   def fsck(): Long = {
-    val (gone0, dangling0) = fsckPlan()
+    val (_, gone0, dangling0) = fsckPlan()
     if (gone0.isEmpty && dangling0.isEmpty) return 0L
     try retryingCommit("FSCK") { () =>
       // replanned per attempt: a concurrent commit may have already
@@ -3897,11 +3839,14 @@ final class MergeTable private (
       // all-empty 'FSCK' commit would be a spurious version bump
       // (audit-history noise, r14 ADVICE); short-circuit to "no
       // repair needed" instead
-      val (gone, dangling) = fsckPlan()
+      // based on the snapshot the plan was made from: a head re-read
+      // here could already include a racer's repair, and this plan
+      // would then publish on top of it instead of rebasing
+      val (v, gone, dangling) = fsckPlan()
       if (gone.isEmpty && dangling.isEmpty)
         throw new FsckAlreadyClean
       (CommitDelta(dangling.map(_.copy(bloom = None)),
-        gone.map(_.relPath)), latestVersion())
+        gone.map(_.relPath)), v)
     } catch { case _: FsckAlreadyClean => 0L }
   }
 
@@ -4026,14 +3971,10 @@ final class MergeTable private (
     * history, columns added by schema evolution), while files the stats
     * PROVE irrelevant are skipped: a recorded range disjoint from
     * [lo, hi], or a recorded nullCount saying the file is all-null in
-    * `c` (BETWEEN is never true of NULL — Delta's nullCount skipping). */
-  def readRange(c: String, lo: Long, hi: Long): DataFrame = {
-    require(statsCols.contains(c),
-      s"MergeTable at $root records stats for ${statsCols.mkString(", ")} " +
-        s"— not $c; reopen with it in statsCols")
-    readEntries(rangeEntries(c, lo, hi))
-      .filter(col(c).cast("long").between(lo, hi))
-  }
+    * `c` (BETWEEN is never true of NULL — Delta's nullCount skipping).
+    * Shorthand for [[scan]] of `CAST(c AS BIGINT) BETWEEN lo AND hi`. */
+  def readRange(c: String, lo: Long, hi: Long): DataFrame =
+    scan(statsColumn(c).cast("long").between(lo, hi))
 
   /** [[readRange]] for a STRING stats column (r15, Delta's truncated
     * string min/max): the rows with `c` in [lo, hi] (code-point order —
@@ -4042,13 +3983,18 @@ final class MergeTable private (
     * without string stats for `c` are scanned (safe fallback), files
     * whose recorded prefix-min exceeds `hi` or whose recorded upper
     * bound undercuts `lo` are skipped — both directions sound under
-    * the truncation contract ([[MergeTable.statsTruncMax]]). */
-  def readRange(c: String, lo: String, hi: String): DataFrame = {
+    * the truncation contract ([[MergeTable.statsTruncMax]]).
+    * Shorthand for [[scan]] of `c BETWEEN lo AND hi`. */
+  def readRange(c: String, lo: String, hi: String): DataFrame =
+    scan(statsColumn(c).between(lo, hi))
+
+  /** `col(c)` for a column this table records stats for; fails fast,
+    * naming the recorded list, otherwise. */
+  private def statsColumn(c: String): Column = {
     require(statsCols.contains(c),
       s"MergeTable at $root records stats for ${statsCols.mkString(", ")} " +
         s"— not $c; reopen with it in statsCols")
-    readEntries(rangeEntriesStr(c, lo, hi))
-      .filter(col(c).between(lo, hi))
+    col(c)
   }
 
   /** Live entries surviving the [lo, hi] STRING stats prune on `c`
@@ -4084,13 +4030,9 @@ final class MergeTable private (
   /** IS NOT NULL data skipping: the non-null rows of `c`, scanning only
     * live files whose recorded nullCount doesn't prove them all-null
     * (Delta's nullCount-based skipping; files without recorded counts
-    * are scanned — safe fallback). */
-  def readNotNull(c: String): DataFrame = {
-    require(statsCols.contains(c),
-      s"MergeTable at $root records stats for ${statsCols.mkString(", ")} " +
-        s"— not $c; reopen with it in statsCols")
-    readEntries(notNullEntries(c)).filter(col(c).isNotNull)
-  }
+    * are scanned — safe fallback). Shorthand for [[scan]] of
+    * `c IS NOT NULL`. */
+  def readNotNull(c: String): DataFrame = scan(statsColumn(c).isNotNull)
 
   /** Live entries surviving the all-null prune on column `c`. */
   private[lake] def notNullEntries(c: String): Seq[FileEntry] = {
@@ -4103,16 +4045,12 @@ final class MergeTable private (
     * files whose bloom filter admits the value. Files with no bloom ref
     * for `c` (pre-bloom history, a writer with different bloomCols) are
     * scanned — the same safe fallback as [[readRange]]'s stats'less
-    * files. The probe is metadata-scale end to end: it reads the K
-    * probe WORDS of each sidecar (parquet pushdown on the word column —
-    * never the whole filter), and the candidate test collects
-    * O(liveFiles × K) small rows. Composes with stats: callers wanting
-    * both prunes can intersect [[pointEntries]] with [[rangeEntries]].
-    * A NULL probe is not expressible (bloom filters index values; use
-    * [[readNotNull]]'s complement for IS NULL). */
+    * files. Shorthand for [[scan]] of `CAST(c AS BIGINT) = value`, so
+    * the stats range prune applies too. A NULL probe is not expressible
+    * (bloom filters index values; use [[readNotNull]]'s complement for
+    * IS NULL). */
   def readPoint(c: String, value: Long): DataFrame =
-    readEntries(pointEntries(c, value))
-      .filter(col(c).cast("long") === lit(value))
+    scan(col(c).cast("long") === lit(value))
 
   /** Live entries surviving the bloom prune of `c = value` (exposed for
     * tests; see [[readPoint]]). */
@@ -4798,7 +4736,7 @@ final class MergeTable private (
     * incremental consumers — pinned by ColumnMappingSpec.) */
   def readVersion(version: Long): DataFrame =
     presentLogicalAs(
-      readEntriesPhysWith(snapshotAt(version),
+      readEntriesPhys(snapshotAt(version),
         if (version == 0L) None else schemaAt(version)),
       if (version == 0L) (Map.empty, Set.empty) else mappingAt(version))
 
@@ -4972,7 +4910,7 @@ final class MergeTable private (
         // schema with a non-trailing partition column breaks the
         // stable-schema law this branch exists for), else data fields
         // then partition columns, then the identity pair.
-        val base = emptyLikePhysWith(declared)
+        val base = emptyLikePhys(declared)
         val (pc, dc) = base.columns.partition(partitionCols.contains)
         val shaped = base.select(
           declaredColumnOrder(declared, (dc ++ pc).toSeq).map(col): _*)
@@ -4982,10 +4920,7 @@ final class MergeTable private (
           .withColumnRenamed(RidCol, "row_id")
           .withColumnRenamed(RcvCol, "row_commit")
       }
-      presentLogicalAs(
-        readEntriesRowIdsPhysWith(sel, declared, Nil), mapping)
-        .withColumnRenamed(RidCol, "row_id")
-        .withColumnRenamed(RcvCol, "row_commit")
+      rowIdsAs(sel, declared, mapping)
     }
     // the shared diff core ([[diffFeed]]), always with update images:
     // a physical-lineage consumer needs both sides of a stored-byte
@@ -5134,8 +5069,8 @@ final class MergeTable private (
         !Using.resource(Files.list(destPath))(_.findFirst().isPresent)),
       s"clone destination $dest is not an empty directory")
     val (srcV, live) = latest()
-    val clone = new MergeTable(spark, destPath, partitionCols, statsCols,
-      deletionVectors, bloomCols, logStore)
+    val clone = open(spark, destPath, TableOptions(partitionCols, statsCols,
+      deletionVectors, bloomCols, logStore))
     Files.createDirectories(destPath)
     // Deletion-vector refs are root-relative paths exactly like data
     // relPaths — rebase both through the common filesystem.
@@ -5515,37 +5450,14 @@ final class MergeTable private (
     * rows. Deletion vectors are anti-joined out at the scan like every
     * tagged read. Every entry must carry an allotment. */
   private def readEntriesRowIdsPhys(entries: Seq[FileEntry],
-      keep: Seq[String] = Nil): DataFrame =
-    readEntriesRowIdsPhysWith(entries, declaredSchema, keep)
-
-  private def readEntriesRowIdsPhysWith(entries: Seq[FileEntry],
-      declared: Option[org.apache.spark.sql.types.StructType],
-      keep: Seq[String]): DataFrame = {
+      keep: Seq[String] = Nil,
+      declared: Option[org.apache.spark.sql.types.StructType] =
+        declaredSchema): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val byDir = entries.groupBy(e => commitDirOf(e.relPath))
-    val (dataFields0, partFields) =
-      resolvePartFields(declared, byDir)
     val longT = org.apache.spark.sql.types.LongType
-    val dataFields = dataFields0 ++ Seq(
-      org.apache.spark.sql.types.StructField(RidCol, longT),
-      org.apache.spark.sql.types.StructField(RcvCol, longT))
-    val base = manifestScan(entries,
-        org.apache.spark.sql.types.StructType(dataFields))
-      .withColumn(FileTag, fileTagExpr(col("_metadata.file_path")))
-      .withColumn(PosCol, col("_metadata.row_index"))
-    val restored =
-      if (partitionCols.nonEmpty && partFields.size == partitionCols.size) {
-        val joined = base.join(broadcast(partValueMap(entries, FileTag)),
-          Seq(FileTag), "left")
-        partitionCols.zip(partFields).foldLeft(joined) {
-          case (d, (pc, pf)) =>
-            val pv =
-              if (pf.dataType == org.apache.spark.sql.types.NullType)
-                lit(null)
-              else col(PvColPrefix + pc).cast(pf.dataType)
-            d.withColumn(pc, pv)
-        }
-      } else base
+    val (restored, visible) = attachedScan(entries, declared, tagged = true,
+      extra = Seq(org.apache.spark.sql.types.StructField(RidCol, longT),
+        org.apache.spark.sql.types.StructField(RcvCol, longT)))
     val masked = applyVectors(restored, entries)
     val riSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField(FileTag,
@@ -5565,8 +5477,6 @@ final class MergeTable private (
       .withColumn(RidCol,
         coalesce(col(RidCol), col(RiBaseCol) + col(PosCol)))
       .withColumn(RcvCol, coalesce(col(RcvCol), col(RiVerCol)))
-    val visible = declaredColumnOrder(declared, dataFields0.map(_.name) ++
-      (if (partFields.size == partitionCols.size) partitionCols else Nil))
     withIds.select(
       (visible ++ Seq(RidCol, RcvCol) ++ keep).map(col): _*)
   }
@@ -5584,16 +5494,23 @@ final class MergeTable private (
     * on at 100 TB: a stable join key per row that survives OPTIMIZE,
     * which no expression over row CONTENT (and no
     * `monotonically_increasing_id`) can provide. */
-  def readWithRowIds(): DataFrame = {
-    val (_, live) = latest()
-    if (live.isEmpty)
-      return readEntries(live)
+  def readWithRowIds(): DataFrame =
+    rowIdsAs(latest()._2, declaredSchema, currentMapping())
+
+  /** `entries` with each row's identity surfaced as `row_id` /
+    * `row_commit` (NULL for an empty snapshot), read under `declared`
+    * and presented through `mapping`. */
+  private def rowIdsAs(entries: Seq[FileEntry],
+      declared: Option[org.apache.spark.sql.types.StructType],
+      mapping: (Map[String, String], Set[String])): DataFrame =
+    if (entries.isEmpty)
+      presentLogicalAs(readEntriesPhys(entries, declared), mapping)
         .withColumn("row_id", lit(null).cast("long"))
         .withColumn("row_commit", lit(null).cast("long"))
-    presentLogical(readEntriesRowIdsPhys(live))
+    else presentLogicalAs(readEntriesRowIdsPhys(entries, declared = declared),
+      mapping)
       .withColumnRenamed(RidCol, "row_id")
       .withColumnRenamed(RcvCol, "row_commit")
-  }
 
   /** [[readWithRowIds]] under time travel: the snapshot AT `version`
     * with each row's identity — ids are assigned AT COMMIT and ride
@@ -5601,36 +5518,28 @@ final class MergeTable private (
     * `row_id` in both reads (the lineage key across history), and
     * `row_commit` is at most `version` by construction. As-of schema
     * and column mapping apply exactly as in [[readVersion]]. */
-  def readVersionWithRowIds(version: Long): DataFrame = {
-    val entries = snapshotAt(version)
-    val declared = if (version == 0L) None else schemaAt(version)
-    val mapping: (Map[String, String], Set[String]) =
-      if (version == 0L) (Map.empty, Set.empty) else mappingAt(version)
-    if (entries.isEmpty)
-      return readVersion(version)
-        .withColumn("row_id", lit(null).cast("long"))
-        .withColumn("row_commit", lit(null).cast("long"))
-    presentLogicalAs(
-      readEntriesRowIdsPhysWith(entries, declared, Nil), mapping)
-      .withColumnRenamed(RidCol, "row_id")
-      .withColumnRenamed(RcvCol, "row_commit")
-  }
+  def readVersionWithRowIds(version: Long): DataFrame =
+    rowIdsAs(snapshotAt(version), schemaAt(version),
+      if (version == 0L) (Map.empty, Set.empty) else mappingAt(version))
 
   /** Rewrite-side read for the OPTIMIZE family: on a row-tracked
     * snapshot, carry each row's absolute id/version as the MATERIALIZED
     * physical columns so [[writeData]] persists them through the
-    * rewrite; otherwise the plain logical read. */
-  private def readForRewrite(entries: Seq[FileEntry]): DataFrame =
+    * rewrite; otherwise the plain logical read — tagged when the
+    * caller `keep`s internal columns ([[readEntriesTagged]]). */
+  private def readForRewrite(entries: Seq[FileEntry],
+      keep: Seq[String] = Nil): DataFrame =
     if (entries.nonEmpty && entries.forall(_.rowIds.isDefined))
-      presentLogical(readEntriesRowIdsPhys(entries))
+      presentLogical(readEntriesRowIdsPhys(entries, keep))
+    else if (keep.nonEmpty) readEntriesTagged(entries, keep)
     else readEntries(entries)
 
-  /** The PHYSICAL schema [[readEntriesPhysWith]] would produce for
+  /** The PHYSICAL schema [[readEntriesPhys]] would produce for
     * `entries`, computed from (memoized) metadata alone — no throwaway
     * scan plan over the live paths. r13's LogDepthBench: at 1000 live
     * files a `readEntries(live).schema` costs ~1.6 s of driver path
     * resolution, and append's schema check paid it on EVERY commit.
-    * The branch structure mirrors [[readEntriesPhysWith]]; the
+    * The branch structure mirrors [[attachedScan]]; the
     * deletion-vector divert is schema-neutral (the tagged read drops
     * its tag columns and selects the same visible columns). */
   private def physicalSchemaOf(entries: Seq[FileEntry])
@@ -5683,63 +5592,75 @@ final class MergeTable private (
       new java.util.ArrayList[org.apache.spark.sql.Row](),
       physicalSchemaOf(entries))).schema
 
-  private[lake] def readEntriesPhys(entries: Seq[FileEntry]): DataFrame =
-    readEntriesPhysWith(entries, declaredSchema)
-
-  /** [[readEntriesPhys]] with an explicit declared-schema override —
-    * what [[readVersion]] threads the AS-OF schema through, so time
-    * travel on a declared-schema table shows the schema of THAT
-    * version (a later metadata-only addColumn must not appear). */
-  private def readEntriesPhysWith(entries: Seq[FileEntry],
-      declared: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
-    if (entries.isEmpty) return emptyLikePhysWith(declared)
-    // Vectored entries divert to the tagged read (which anti-joins the
-    // deletion vectors); the clean path below stays byte-identical to
-    // the vector-free plan.
+  /** PHYSICAL read of `entries` under `declared` — [[readVersion]]
+    * passes the AS-OF schema, so time travel on a declared-schema table
+    * shows the schema of THAT version (a later metadata-only addColumn
+    * must not appear). Vectored entries divert to the tagged read,
+    * which anti-joins the deletion vectors; the clean path stays
+    * byte-identical to the vector-free plan. */
+  private[lake] def readEntriesPhys(entries: Seq[FileEntry],
+      declared: Option[org.apache.spark.sql.types.StructType] =
+        declaredSchema): DataFrame = {
+    if (entries.isEmpty) return emptyLikePhys(declared)
     if (entries.exists(_.dv.isDefined))
-      return readEntriesTaggedPhysWith(entries, keep = Nil, declared)
-    // Group by commit dir: each dir is one hive-partitioned write whose
-    // basePath restores the partition column. commitDirOf (not the
-    // first path component) so a clone's rebased "../source/commit-x"
-    // entries group per SOURCE commit dir, preserving the per-dir
-    // schema-resolution path.
+      return readEntriesTaggedPhys(entries, keep = Nil, declared)
+    val (df, cols) = attachedScan(entries, declared, tagged = false)
+    // only an attach adds working columns to select away
+    if (df.columns.toSeq == cols) df else df.select(cols.map(col): _*)
+  }
+
+  /** The one read assembly under [[readEntriesPhys]],
+    * [[readEntriesTaggedPhys]] and [[readEntriesRowIdsPhys]]: ONE
+    * manifest scan of `entries` however many commit dirs they span,
+    * under the table schema — the DECLARED log schema when the table
+    * has one (a metadata-only addColumn'd field reads NULL from every
+    * pre-evolution file), else the UNION of the per-dir footer schemas
+    * (per-file missing columns read NULL — covers evolveSchema history)
+    * — plus `extra` data fields. Each partition column is re-attached
+    * from MANIFEST metadata (the log, not the path layout, is the source
+    * of truth, as in Delta) through a broadcast (file key → value) join,
+    * cast to the resolved type. A `tagged` scan captures [[FileTag]] and
+    * [[PosCol]] on the scan node and joins on the tag; the plain read
+    * keys the join on [[GraftScanPruning.FileKeyCol]], the shape that
+    * optimizer rule matches. Returns the frame and its visible columns
+    * in declared order.
+    *
+    * Single-dir reads take this path too (r15): the old `hiveRead`
+    * shortcut paid a footer-inference job plus per-path driver
+    * resolution on EVERY read, while the manifest scan lists nothing and
+    * the dir schema is memo-served. Part-file names embed a job UUID, so
+    * they are unique across dirs (the invariant `withStats` keys on). */
+  private def attachedScan(entries: Seq[FileEntry],
+      declared: Option[org.apache.spark.sql.types.StructType],
+      tagged: Boolean,
+      extra: Seq[org.apache.spark.sql.types.StructField] = Nil)
+      : (DataFrame, Seq[String]) = {
+    // commitDirOf (not the first path component) so a clone's rebased
+    // "../source/commit-x" entries group per SOURCE commit dir
     val byDir = entries.groupBy(e => commitDirOf(e.relPath))
     // Many dirs of small files still cost scan TASKS (not plan nodes);
     // compaction remains the small-file remedy.
-    if (byDir.size >= CompactionAdviceDirs)
+    if (!tagged && byDir.size >= CompactionAdviceDirs)
       logger.warn(
         s"MergeTable at $root: live files span ${byDir.size} commit dirs; " +
           "run compact() to coalesce small files")
-    // NOTE (r15): single-dir reads deliberately take the SAME
-    // manifest-backed path as multi-dir ones. The old single-dir
-    // `hiveRead` shortcut paid Spark's DataFrameReader planning on
-    // EVERY read — a per-read footer-inference job plus per-path
-    // driver resolution — while the manifest scan is zero-listing and
-    // the dir schema is memo-served (seeded at write time for
-    // unpartitioned dirs). Lifecycle tables live in exactly one commit
-    // dir most of their life, so they paid that job on every read.
-    // ONE scan node regardless of commit-dir count (a long merge history
-    // previously contributed one scan node per live dir, degrading every
-    // read plan linearly): scan ALL live files in a single multi-path
-    // read under the table schema — the DECLARED log schema when the
-    // table has one (a metadata-only addColumn'd field reads NULL from
-    // every pre-evolution file), else the UNION of the per-dir footer
-    // schemas (per-file missing columns read NULL — covers evolveSchema
-    // history) — and re-attach the partition column from MANIFEST
-    // metadata — the log, not the path layout, is the source of truth
-    // (as in Delta) — via a broadcast (fileName → partitionValue) map,
-    // cast to the schema's type. Per-dir footer resolution is a driver
-    // metadata read (no jobs); part-file names embed a job UUID so they
-    // are unique across dirs (the same invariant `withStats` keys on).
     val (dataFields, partFields) = resolvePartFields(declared, byDir)
-    val base = manifestScan(entries,
-      org.apache.spark.sql.types.StructType(dataFields))
+    val scan = manifestScan(entries,
+      org.apache.spark.sql.types.StructType(dataFields ++ extra))
+    val base =
+      if (tagged) scan
+        .withColumn(FileTag, fileTagExpr(col("_metadata.file_path")))
+        .withColumn(PosCol, col("_metadata.row_index"))
+      else scan
+    val dataCols = dataFields.map(_.name)
     if (partitionCols.nonEmpty && partFields.size == partitionCols.size) {
-      val attached = base
-        .withColumn("__graft_file", fileTagExpr(input_file_name()))
-        .join(broadcast(partValueMap(entries, "__graft_file")),
-          Seq("__graft_file"), "left")
-      val withParts = partitionCols.zip(partFields).foldLeft(attached) {
+      val (keyed, key) =
+        if (tagged) (base, FileTag)
+        else (base.withColumn(FileKeyCol, fileTagExpr(input_file_name())),
+          FileKeyCol)
+      val joined = keyed.join(broadcast(partValueMap(entries, key)),
+        Seq(key), "left")
+      val withParts = partitionCols.zip(partFields).foldLeft(joined) {
         case (d, (pc, pf)) =>
           val pv =
             if (pf.dataType == org.apache.spark.sql.types.NullType)
@@ -5747,9 +5668,8 @@ final class MergeTable private (
             else col(PvColPrefix + pc).cast(pf.dataType)
           d.withColumn(pc, pv)
       }
-      withParts.select(declaredColumnOrder(declared,
-        dataFields.map(_.name) ++ partitionCols).map(col): _*)
-    } else base
+      (withParts, declaredColumnOrder(declared, dataCols ++ partitionCols))
+    } else (base, dataCols)
   }
 
   /** The (data fields, partition fields) split for a multi-dir read:
@@ -5824,49 +5744,11 @@ final class MergeTable private (
     * namespace guard now rejects; this keeps the read path correct by
     * construction rather than by guard.) */
   private def readEntriesTaggedPhys(entries: Seq[FileEntry],
-      keep: Seq[String]): DataFrame =
-    readEntriesTaggedPhysWith(entries, keep, declaredSchema)
-
-  private def readEntriesTaggedPhysWith(entries: Seq[FileEntry],
       keep: Seq[String],
-      declared: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
-    def tagged(scan: DataFrame): DataFrame = scan
-      .withColumn(FileTag,
-        fileTagExpr(col("_metadata.file_path")))
-      .withColumn(PosCol, col("_metadata.row_index"))
-    val byDir = entries.groupBy(e => commitDirOf(e.relPath))
-    // Base scan + partition restore: the same two shapes as readEntries
-    // (single-dir hive read / multi-dir union-schema read with the
-    // partition value re-attached from manifest metadata), with the tag
-    // columns added directly on the scan node in both.
-    // Single-dir reads go manifest-backed too — same rationale as
-    // [[readEntriesPhysWith]] (r15: the hiveRead shortcut cost a
-    // footer-inference job per read).
-    val (restored, dataCols): (DataFrame, Seq[String]) =
-      {
-        val (dataFields, partFields) = resolvePartFields(declared, byDir)
-        val base = tagged(manifestScan(entries,
-          org.apache.spark.sql.types.StructType(dataFields)))
-        if (partitionCols.nonEmpty &&
-            partFields.size == partitionCols.size) {
-          val joined =
-            base.join(broadcast(partValueMap(entries, FileTag)),
-              Seq(FileTag), "left")
-          val withParts = partitionCols.zip(partFields).foldLeft(joined) {
-            case (d, (pc, pf)) =>
-              val pv =
-                if (pf.dataType == org.apache.spark.sql.types.NullType)
-                  lit(null)
-                else col(PvColPrefix + pc).cast(pf.dataType)
-              d.withColumn(pc, pv)
-          }
-          (withParts.drop(partitionCols.map(PvColPrefix + _): _*),
-            declaredColumnOrder(declared,
-              dataFields.map(_.name) ++ partitionCols))
-        } else (base, dataFields.map(_.name).toSeq)
-      }
-    val masked = applyVectors(restored, entries)
-    masked.select((dataCols ++ keep).map(col): _*)
+      declared: Option[org.apache.spark.sql.types.StructType] =
+        declaredSchema): DataFrame = {
+    val (restored, dataCols) = attachedScan(entries, declared, tagged = true)
+    applyVectors(restored, entries).select((dataCols ++ keep).map(col): _*)
   }
 
   /** Anti-join `df` (carrying scan-level [[FileTag]]/[[PosCol]]) against
@@ -5969,11 +5851,9 @@ final class MergeTable private (
     * travel to an empty version of a since-renamed table show current
     * names — the as-of re-mapping keyed on physical names no-opped
     * over already-renamed columns; r10 ADVICE finding.) */
-  private def emptyLikePhys(): DataFrame =
-    emptyLikePhysWith(declaredSchema)
-
-  private def emptyLikePhysWith(
-      declared: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
+  private def emptyLikePhys(
+      declared: Option[org.apache.spark.sql.types.StructType] =
+        declaredSchema): DataFrame = {
     // Declared schema first: a never-written CREATE'd table reads as a
     // correctly-typed empty frame straight from the log.
     declared.foreach { s =>
@@ -6646,8 +6526,7 @@ object MergeTable {
   def apply(spark: SparkSession, root: String,
       partitionCol: Option[String] = None,
       statsCol: Option[String] = None): MergeTable =
-    new MergeTable(spark, Paths.get(root), partitionCol.toSeq,
-      statsCol.toSeq, logStore = LogStore.forConf(spark))
+    apply(spark, root, partitionCol.toSeq, statsCol.toSeq, false, Nil)
 
   /** As above with MULTIPLE stats columns (Delta's first-N-columns
     * stats contract, made explicit): every listed long-castable column
@@ -6657,8 +6536,7 @@ object MergeTable {
   def apply(spark: SparkSession, root: String,
       partitionCol: Option[String],
       statsCols: Seq[String]): MergeTable =
-    new MergeTable(spark, Paths.get(root), partitionCol.toSeq, statsCols,
-      logStore = LogStore.forConf(spark))
+    apply(spark, root, partitionCol.toSeq, statsCols, false, Nil)
 
   /** As above with DELETION VECTORS enabled (Delta's
     * `delta.enableDeletionVectors` table feature): [[MergeTable.delete]]
@@ -6677,7 +6555,7 @@ object MergeTable {
       partitionCol: Option[String],
       statsCols: Seq[String],
       deletionVectors: Boolean): MergeTable =
-    apply(spark, root, partitionCol, statsCols, deletionVectors, Nil)
+    apply(spark, root, partitionCol.toSeq, statsCols, deletionVectors, Nil)
 
   /** As above with a per-file BLOOM-FILTER INDEX over `bloomCols`
     * (Delta's `delta.bloomFilter` column index): every commit writes a
@@ -6692,15 +6570,9 @@ object MergeTable {
       partitionCol: Option[String],
       statsCols: Seq[String],
       deletionVectors: Boolean,
-      bloomCols: Seq[String]): MergeTable = {
-    require(!statsCols.exists(_.startsWith(DvTok)),
-      s"stats column names may not start with '$DvTok' (manifest token prefix)")
-    require(!bloomCols.exists(c => c.exists(",+\t:".contains(_))),
-      "bloom column names may not contain ',', '+', ':' or tab " +
-        "(manifest token separators)")
-    new MergeTable(spark, Paths.get(root), partitionCol.toSeq, statsCols,
-      deletionVectors, bloomCols, logStore = LogStore.forConf(spark))
-  }
+      bloomCols: Seq[String]): MergeTable =
+    apply(spark, root, partitionCol.toSeq, statsCols, deletionVectors,
+      bloomCols)
 
   /** Open a table partitioned on MULTIPLE columns (Delta's
     * `partitionBy(a, b, ...)`): the layout nests one hive level per
@@ -6713,7 +6585,15 @@ object MergeTable {
       partitionCols: Seq[String],
       statsCols: Seq[String],
       deletionVectors: Boolean,
-      bloomCols: Seq[String]): MergeTable = {
+      bloomCols: Seq[String]): MergeTable =
+    open(spark, Paths.get(root), TableOptions(partitionCols, statsCols,
+      deletionVectors, bloomCols, LogStore.forConf(spark)))
+
+  /** The one construction site: every `apply` overload, builder and
+    * clone comes through here, so the option checks live once. */
+  private def open(spark: SparkSession, root: Path,
+      opts: TableOptions): MergeTable = {
+    import opts._
     require(partitionCols.distinct.length == partitionCols.length,
       s"duplicate partition columns: $partitionCols")
     require(!statsCols.exists(_.startsWith(DvTok)),
@@ -6721,8 +6601,19 @@ object MergeTable {
     require(!bloomCols.exists(c => c.exists(",+\t:".contains(_))),
       "bloom column names may not contain ',', '+', ':' or tab " +
         "(manifest token separators)")
-    new MergeTable(spark, Paths.get(root), partitionCols, statsCols,
-      deletionVectors, bloomCols, logStore = LogStore.forConf(spark))
+    // Bloom columns must be DATA columns: partitionBy strips partition
+    // columns from the data files, so a bloom over one would scan
+    // all-NULL values, silently write an empty sidecar slice, and later
+    // probes would prune files that DO hold matching rows — bloom false
+    // negatives, i.e. wrong results. Fail at construction, not mid-query
+    // (r15 advice: withBlooms' writtenSchema check passed for partition
+    // columns because df.schema still carries them pre-strip).
+    require(bloomCols.intersect(partitionCols).isEmpty,
+      s"MergeTable at $root: bloom column(s) " +
+        s"${bloomCols.intersect(partitionCols).mkString(", ")} are " +
+        "partition column(s) — bloom columns must be data columns " +
+        "(partition pruning already covers the partition column)")
+    new MergeTable(spark, root, opts)
   }
 
   /** The exact dir-name shape [[writeData]] produces: `commit-` + the
@@ -6760,6 +6651,23 @@ object MergeTable {
       .foreach(Files.deleteIfExists(_))
   }
 }
+
+/** Everything a [[MergeTable]] handle is opened with besides its session
+  * and root: the layout (partition, stats and bloom columns), the write
+  * features, and the log settings. The `with*` builders derive a new
+  * handle by `copy`. */
+private[lake] final case class TableOptions(
+    partitionCols: Seq[String],
+    statsCols: Seq[String],
+    deletionVectors: Boolean = false,
+    bloomCols: Seq[String] = Nil,
+    logStore: LogStore = LogStore.Posix,
+    optimizeWrite: Boolean = false,
+    autoCompact: Option[(Long, Int)] = None,
+    ckptRetention: (Int, Long) = MergeTable.DefaultCkptRetention,
+    rowTracking: Boolean = false,
+    verifyOnRead: Boolean = false,
+    pqCkptEntries: Long = MergeTable.DefaultPqCkptEntries)
 
 /** One `WHEN MATCHED [AND <condition>] THEN UPDATE|DELETE` clause of a
   * conditional [[MergeTable.merge]]. Conditions are evaluated over the

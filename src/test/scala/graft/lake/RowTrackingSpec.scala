@@ -103,6 +103,10 @@ class RowTrackingSpec extends SparkSpec {
     t.compactWhere(col("p") === lit("x"), filesPerPartition = 1)
     assert(ids(t) === before, "scoped optimize changed no row's identity")
 
+    // the fixture's one numeric column twice: a 2-column Hilbert rewrite
+    t.clusterHilbert(Seq("n", "n"))
+    assert(ids(t) === before, "hilbert clustering changed no row's identity")
+
     // bin-packing: write two small files into one partition, pack them
     t.append(Seq(("e", "x", 5)).toDF("id", "p", "n"))
     t.append(Seq(("f", "x", 6)).toDF("id", "p", "n"))
